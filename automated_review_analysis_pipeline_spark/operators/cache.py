@@ -56,7 +56,9 @@ def load_cache(spark: SparkSession, path: str) -> DataFrame:
         if os.path.isdir(path) and any(
             f.endswith(".parquet") for f in os.listdir(path)
         ):
-            return spark.read.parquet(path).dropDuplicates(KEY_COLS)
+            # explicit schema: no footer-reading inference job per load
+            return (spark.read.schema(CACHE_SCHEMA).parquet(path)
+                    .dropDuplicates(KEY_COLS))
     except OSError:
         pass
     return spark.createDataFrame([], CACHE_SCHEMA)
@@ -239,18 +241,20 @@ def classify_with_cache(
     misses = distinct_keys.join(cache, KEY_COLS, "left_anti")
     if max_parallelism is not None:
         misses = misses.repartition(max_parallelism)
-    computed = classifier(misses).select(*KEY_COLS, *VAL_COLS)
 
     if cache_path:
         # Atomic append of the miss partition (replaces the reference's
-        # flush-every-200); re-runs then classify zero rows. Read back
-        # through load_cache so concurrently-appended duplicate keys
-        # collapse to one row before the join-back.
-        computed.write.mode("append").parquet(cache_path)
-        computed = load_cache(spark, cache_path).join(
+        # flush-every-200); re-runs then classify zero rows, and an
+        # all-hit run calls no classifier and appends no empty part.
+        # Read back through load_cache so concurrently-appended
+        # duplicate keys collapse to one row before the join-back.
+        if not misses.isEmpty():
+            classifier(misses).select(*KEY_COLS, *VAL_COLS) \
+                .write.mode("append").parquet(cache_path)
+        return load_cache(spark, cache_path).join(
             distinct_keys, KEY_COLS, "left_semi")
-        return computed
 
+    computed = classifier(misses).select(*KEY_COLS, *VAL_COLS)
     return cache.join(distinct_keys, KEY_COLS, "left_semi").unionByName(computed)
 
 

@@ -40,13 +40,16 @@ from automated_review_analysis_pipeline_spark.functions.text import (
 from automated_review_analysis_pipeline_spark.operators.reshape import explode_products
 from automated_review_analysis_pipeline_spark.sources.survey import question_columns
 
-# classifier(question_text, cleaned_answer_col) -> struct(sentiment, category)
-Classifier = Callable[[str, Column], Column]
+# classifier(question_col, cleaned_answer_col) -> struct(sentiment, category);
+# the question is a column so one projection can classify rows of every
+# question at once (kernels that do not prompt with it ignore it)
+Classifier = Callable[[Column, Column], Column]
 
 
-def demo_classifier(question_text: str, answer: Column) -> Column:
+def demo_classifier(question: Column, answer: Column) -> Column:
     """Deterministic demo kernel (C2 lexicon sentiment + C3 keyword
-    category) -- pure column expressions, SQL-oracle-checkable."""
+    category) -- pure column expressions, SQL-oracle-checkable. The
+    question is ignored."""
     return F.struct(
         lexicon_sentiment(answer).alias("sentiment"),
         keyword_category(answer).alias("category"),
@@ -166,7 +169,7 @@ def analyze_wide(
             is_filler(ans),
             F.struct(F.lit("Neutral").alias("sentiment"),
                      F.lit("No Feedback").alias("category")),
-        ).otherwise(classifier(q, cls_input))
+        ).otherwise(classifier(F.lit(q), cls_input))
         res_cols.append(res.alias(f"__res_{b}"))
     df = df.select("*", *res_cols)
 
@@ -196,8 +199,8 @@ def analyze_wide_cached(
     BOTH modes (the reference consults the cache before VADER too) -- a
     reference user's migrated .analysis_cache.json (import_json_cache)
     short-circuits every already-paid classification. ``max_parallelism``
-    bounds API-mode concurrency (classify_with_cache repartitions the
-    miss set)."""
+    bounds API-mode concurrency: the miss set is repartitioned to that
+    many partitions before the single classify stage."""
     from automated_review_analysis_pipeline_spark.operators.cache import (
         KEY_COLS,
         load_cache,
@@ -225,11 +228,12 @@ def analyze_wide_cached(
 
     # ONE cache pass for all questions (vs one anti-join + append per
     # question): union the per-question distinct key sets, anti-join the
-    # cache once, run each question's kernel on ITS slice of the
-    # plan-cached miss set (per-question slices, not a when-chain over
-    # UDFs -- Spark evaluates every UDF referenced in a projection for
-    # every row, which would multiply API calls by |questions|), append
-    # the union atomically, and read the combined results back.
+    # cache once, and classify the whole plan-cached miss set in ONE
+    # kernel projection that reads the question from the row -- one
+    # Python stage of max_parallelism tasks, not one UDF branch per
+    # question (a when-chain over per-question UDFs would be worse
+    # still: Spark evaluates every UDF referenced in a projection for
+    # every row, multiplying API calls by |questions|).
     all_keys = None
     for qn, b in zip(q_names, bases):
         k = cleaned.select(
@@ -244,10 +248,8 @@ def analyze_wide_cached(
     all_keys = plan_cache(all_keys.distinct())
 
     cache = load_cache(spark, cache_path)
-    # repartition bounds BOTH the API concurrency (max_parallelism) and
-    # the task fan-out of the per-question kernel branches below (each
-    # branch scans every partition of the cached miss set, so partition
-    # count multiplies by |questions| in the write job)
+    # repartition bounds the API concurrency: the classify stage below
+    # runs exactly max_parallelism tasks
     misses = (
         all_keys.join(cache, KEY_COLS, "left_anti")
         .repartition(max_parallelism
@@ -255,22 +257,21 @@ def analyze_wide_cached(
     )
     misses = plan_cache(misses)
 
-    inp = F.substring(F.col("answer"), 1, max_chars) \
-        if truncate else F.col("answer")
-    computed = None
-    for qn in q_names:
-        part = misses.where(F.col("question") == qn).select(
-            *KEY_COLS, classifier(qn, inp).alias("__r")
+    # an all-hit run (count() also materializes the cached miss set)
+    # runs no kernel and appends no empty parquet part
+    if misses.count():
+        inp = F.substring(F.col("answer"), 1, max_chars) \
+            if truncate else F.col("answer")
+        computed = misses.select(
+            *KEY_COLS, classifier(F.col("question"), inp).alias("__r")
         ).select(
             *KEY_COLS,
             F.col("__r.sentiment").alias("sentiment"),
             F.col("__r.category").alias("category"),
         )
-        computed = part if computed is None else computed.unionByName(part)
-
-    # atomic append of ALL misses (replaces the reference's
-    # flush-every-200); re-runs then classify zero rows
-    computed.write.mode("append").parquet(cache_path)
+        # atomic append of ALL misses (replaces the reference's
+        # flush-every-200); re-runs then classify zero rows
+        computed.write.mode("append").parquet(cache_path)
     results = plan_cache(
         load_cache(spark, cache_path).join(all_keys, KEY_COLS, "left_semi"))
 

@@ -22,6 +22,12 @@ DEFAULT_CONFS: dict[str, str] = {
         os.environ.get("SPARK_GRAFT_MIN_PART_SIZE", "64kb"),
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.shuffle.partitions": "32",
+    # Let AQE re-plan cached frames too: without it an InMemoryRelation
+    # keeps the static spark.sql.shuffle.partitions layout, so every
+    # later read of a small cached frame (each per-question broadcast
+    # in analyze_wide_cached reads the cached key, miss and result
+    # sets) pays 32 near-empty tasks instead of AQE's coalesced few.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Echoes the reference's flush-every-200 granularity for API-mode

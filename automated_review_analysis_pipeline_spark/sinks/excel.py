@@ -1,8 +1,10 @@
 """Excel workbook sink (reference K1-K5, survey_analysis.py:360-446).
 
 Excel is inherently a driver-side, small-data sink (1 048 576-row sheet
-cap), so the wide/summary DataFrames are collect()ed and written with
-xlsxwriter using the reference's exact layout: one data sheet per product
+cap), so the wide DataFrame is collect()ed ONCE -- the Summary rows are
+counted from those same rows on the driver instead of running the wide
+plan a second time -- and written with xlsxwriter using the reference's
+exact layout: one data sheet per product
 (ResponseID string-sorted -- the reference's lexicographic quirk, K1/O1),
 a Summary sheet, and a chart sheet per product with per-question pie
 charts (helper blocks at columns 50/51, 2-per-row grid, 480x320, titles
@@ -19,12 +21,9 @@ Excel only ever receives aggregates.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 from automated_review_analysis_pipeline_spark.functions.text import sanitize_sheet_name
-from automated_review_analysis_pipeline_spark.operators.reshape import summary_from_wide
 from automated_review_analysis_pipeline_spark.sinks import xlsx_writer
 
 try:  # gate: not in the container's baked-in set
@@ -43,54 +42,52 @@ def _column_width(header: str, values: list[str], lo: int = 12, hi: int = 60) ->
     return max(lo, min(hi, int(0.9 * longest)))
 
 
+def summary_rows(cols: list[str], wide_rows: list) -> list[Row]:
+    """The rows of ``summary_from_wide(wide)`` (operators/reshape.py),
+    counted on the driver from already-collected wide rows and sorted by
+    (Product, Question) -- the golden workbook's Summary order.
+
+    Same semantics as the Spark plan: a blank or missing sentiment counts
+    as Neutral after trimming spaces only (``F.trim``, not ``str.strip``),
+    and an off-enum value keeps its (Product, Question) group with zero
+    counts, as the explicit-values pivot does."""
+    product = cols.index("Product")
+    sent_cols = [(i, c[: -len("_Sentiment")]) for i, c in enumerate(cols)
+                 if c.endswith("_Sentiment")]
+    counts: dict[tuple, dict[str, int]] = {}
+    for row in wide_rows:
+        for i, question in sent_cols:
+            value = row[i]
+            sentiment = ("" if value is None else str(value)).strip(" ") \
+                or "Neutral"
+            group = counts.setdefault((row[product], question),
+                                      dict.fromkeys(SENTIMENTS, 0))
+            if sentiment in group:
+                group[sentiment] += 1
+    return [Row(Product=p, Question=q, **group)
+            for (p, q), group in sorted(counts.items())]
+
+
 def write_excel_report(wide: DataFrame, out_path: str,
                        base_to_display: dict[str, str] | None = None) -> list[str]:
     """Write the report; returns the sheet-name inventory (tested against
-    the reference's 13-sheet golden layout shape)."""
+    the reference's 13-sheet golden layout shape). Runs one Spark action:
+    a plain collect() of ``wide`` (the per-product sort below orders the
+    rows)."""
     base_to_display = base_to_display or {}
-    # (Product, Question) order matches the golden workbook's Summary sheet
-    summary_rows = sorted(summary_from_wide(wide).collect(),
-                          key=lambda r: (r["Product"], r["Question"]))
-    wide_rows = wide.orderBy("ResponseID").collect()
+    wide_rows = wide.collect()
     cols = wide.columns
-
-    products = sorted({r["Product"] for r in wide_rows})
-    sheets: list[str] = []
 
     per_product = {
         p: sorted(
             (r for r in wide_rows if r["Product"] == p),
             key=lambda r: r["ResponseID"],  # string sort: golden-quirk O1
         )
-        for p in products
+        for p in sorted({r["Product"] for r in wide_rows})
     }
 
-    return _write_xlsx(out_path, cols, per_product, summary_rows,
-                       base_to_display)
-
-
-def write_csv_dir(out_path: str, cols, per_product, summary_rows) -> list[str]:
-    """Plain-CSV export: <out_path>/ with one CSV per data sheet (kept as
-    an explicit alternative format; the default sink now always writes a
-    real workbook)."""
-    import csv
-
-    root = out_path if not out_path.endswith(".xlsx") else out_path[:-5]
-    os.makedirs(root, exist_ok=True)
-    sheets = []
-    for product, rows in per_product.items():
-        name = sanitize_sheet_name(product)
-        sheets.append(name)
-        with open(os.path.join(root, f"{name}.csv"), "w", newline="") as f:
-            w = csv.writer(f)
-            w.writerow(cols)
-            w.writerows([list(r) for r in rows])
-    with open(os.path.join(root, "Summary.csv"), "w", newline="") as f:
-        w = csv.writer(f)
-        w.writerow(["Product", "Question", *SENTIMENTS])
-        w.writerows([list(r) for r in summary_rows])
-    sheets.append("Summary")
-    return sheets
+    return _write_xlsx(out_path, cols, per_product,
+                       summary_rows(cols, wide_rows), base_to_display)
 
 
 def _write_xlsx(out_path: str, cols, per_product, summary_rows,

@@ -39,6 +39,8 @@ def _counting_classifier(counter):
 
 
 def test_cache_dedups_and_is_idempotent(spark, tmp_path):
+    import os
+
     cache_path = str(tmp_path / "cache_parquet")
     keys = spark.createDataFrame(
         [("retail", "q1", "love it")] * 5 + [("retail", "q1", "meh")] * 3,
@@ -48,12 +50,14 @@ def test_cache_dedups_and_is_idempotent(spark, tmp_path):
                               cache_path)
     assert out.count() == 2          # distinct keys only
     assert counter["calls"] == 2     # dedup-before-compute (C7)
+    files = sorted(os.listdir(cache_path))
 
-    # second run: all hits, zero classifier calls
+    # second run: all hits, zero classifier calls, no empty append
     out2 = classify_with_cache(keys, _counting_classifier(counter), spark,
                                cache_path)
     assert out2.count() == 2
     assert counter["calls"] == 2
+    assert sorted(os.listdir(cache_path)) == files
 
     cached = load_cache(spark, cache_path)
     assert cached.count() == 2
@@ -263,3 +267,56 @@ def test_excel_sheet_rows_sorted_lexicographically(spark, tmp_path):
     ids = [row[0] for row in grid[1:]]  # skip header
     assert ids == sorted(ids)          # lexicographic
     assert ids != sorted(ids, key=int)  # and NOT numeric
+
+
+def test_excel_summary_matches_summary_from_wide(spark, tmp_path):
+    """The sink counts its Summary rows on the driver from the one
+    collect() of the wide frame; they must equal the Spark plan
+    summary_from_wide(wide) in (Product, Question) order -- including
+    blank/None sentiments (Neutral after a spaces-only trim, as F.trim)
+    and off-enum values (their group survives with zero counts)."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from automated_review_analysis_pipeline_spark.operators.reshape import (
+        summary_from_wide,
+    )
+    from automated_review_analysis_pipeline_spark.sinks.excel import (
+        summary_rows,
+        write_excel_report,
+    )
+    from automated_review_analysis_pipeline_spark.sinks.xlsx_writer import (
+        read_workbook,
+    )
+    from automated_review_analysis_pipeline_spark.sources.synthetic_survey import (
+        register,
+    )
+
+    register(spark)
+    survey = spark.read.format("synthetic_survey") \
+        .option("numRows", 40).option("numPartitions", 2).load()
+    wide, b2d = analyze_wide(survey)
+    cols = wide.columns
+    question = cols[2][: -len("_Answer")]
+    hand = [
+        ("x1", "Alpha Jacket", "a", "", "General"),           # blank
+        ("x2", "Alpha Jacket", "b", None, "General"),         # None
+        ("x3", "Beta Boots", "c", "  ", "General"),           # spaces only
+        ("x4", "Beta Boots", "d", " Positive ", "General"),   # padded
+        ("x5", "Beta Boots", "e", "\tNegative", "General"),   # tab: kept
+        ("x6", "Omega Hat", "f", "Ecstatic", "General"),      # off-enum
+    ]
+    schema = StructType([StructField(c, StringType()) for c in cols])
+    wide = wide.unionByName(spark.createDataFrame(hand, schema))
+
+    want = sorted(summary_from_wide(wide).collect(),
+                  key=lambda r: (r["Product"], r["Question"]))
+    got = summary_rows(cols, wide.collect())
+    assert [r.asDict() for r in got] == [r.asDict() for r in want]
+    assert ("Omega Hat", question, 0, 0, 0, 0) in [tuple(r) for r in got]
+
+    # and that is what the workbook's Summary sheet holds
+    out = str(tmp_path / "summary.xlsx")
+    write_excel_report(wide, out, b2d)
+    sheet = read_workbook(out)["Summary"]
+    assert sheet[0] == list(want[0].asDict())
+    assert sheet[1:] == [list(r) for r in want]

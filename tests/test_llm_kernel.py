@@ -12,8 +12,15 @@ from __future__ import annotations
 
 import os
 
-from automated_review_analysis_pipeline_spark.operators.classify import llm_kernel
-from automated_review_analysis_pipeline_spark.plans.survey_pipeline import analyze_wide
+from automated_review_analysis_pipeline_spark.operators.classify import (
+    SYS_PROMPT,
+    build_user_prompt,
+    llm_kernel,
+)
+from automated_review_analysis_pipeline_spark.plans.survey_pipeline import (
+    analyze_wide,
+    analyze_wide_cached,
+)
 
 
 def _make_factory(fail_first: int = 0, always_fail: bool = False,
@@ -33,7 +40,14 @@ def _make_factory(fail_first: int = 0, always_fail: bool = False,
                 state["calls"] += 1
                 if marker_dir:
                     import uuid
-                    open(os.path.join(marker_dir, uuid.uuid4().hex),
+
+                    from pyspark import TaskContext
+
+                    # <stage id>-<uuid>: tests can tell which stage
+                    # made the call
+                    stage = TaskContext.get().stageId()
+                    open(os.path.join(marker_dir,
+                                      f"{stage}-{uuid.uuid4().hex}"),
                          "w").close()
                 if always_fail:
                     raise RuntimeError("simulated outage")
@@ -223,3 +237,104 @@ def test_llm_kernel_filler_short_circuit_skips_api(spark, tmp_path):
     assert rows["a real answer"]["Q1_Category"] == "General"
     # exactly ONE api call: the three filler rows were skipped in-kernel
     assert len(os.listdir(marker)) == 1
+
+
+# three questions; 'n/a' and '' are filler, 'fine' repeats across rows
+_THREE_Q_ROWS = [
+    ("a@x", "A", "P1", "love the fit", "fine", "n/a"),
+    ("b@x", "B", "P1, P2", "love the fit", "slow shipping", "fine"),
+    ("c@x", "C", "P2", "empty-cat here", "fine", ""),
+    ("d@x", "D", "P3", "plain words", "n/a", "a much longer answer that "
+                                             "runs past the cap"),
+]
+_THREE_Q_COLS = ["Email", "Name", "Products", "How was the fit?",
+                 "Delivery", "Anything else"]
+
+
+def _distinct_non_filler_keys():
+    return {(q, r[i]) for r in _THREE_Q_ROWS
+            for i, q in enumerate(_THREE_Q_COLS) if i >= 3
+            if r[i] not in ("n/a", "")}
+
+
+def test_max_parallelism_bounds_the_classify_stage(spark, tmp_path):
+    """max_parallelism=1 must mean ONE concurrent request stream: the
+    cached plan classifies every question's misses in a single stage of
+    exactly one task (not one task per question), bills each distinct
+    non-filler key once, and a warm re-run bills nothing and appends
+    nothing."""
+    marker = str(tmp_path / "api_calls")
+    os.makedirs(marker)
+    cache = str(tmp_path / "cache")
+    kernel = llm_kernel("retail",
+                        client_factory=_make_factory(marker_dir=marker),
+                        base_delay=0.001)
+    survey = spark.createDataFrame(_THREE_Q_ROWS, _THREE_Q_COLS)
+
+    wide, _ = analyze_wide_cached(survey, kernel, "retail", cache,
+                                  max_parallelism=1)
+    wide.collect()
+    calls = os.listdir(marker)
+    assert len(calls) == len(_distinct_non_filler_keys()) == 7
+    stages = {int(name.split("-")[0]) for name in calls}
+    assert len(stages) == 1
+    info = spark.sparkContext.statusTracker().getStageInfo(stages.pop())
+    assert info.numTasks == 1
+
+    files = sorted(os.listdir(cache))
+    wide2, _ = analyze_wide_cached(survey, kernel, "retail", cache,
+                                   max_parallelism=1)
+    assert sorted(tuple(r) for r in wide2.collect()) == \
+        sorted(tuple(r) for r in wide.collect())
+    assert len(os.listdir(marker)) == len(calls)   # warm: zero calls
+    assert sorted(os.listdir(cache)) == files      # and no new file
+
+
+def test_llm_kernel_prompts_with_each_rows_question(spark, tmp_path):
+    """With the question as a column, every request carries ITS row's
+    question: the user message is build_user_prompt(industry, question,
+    answer[:max_chars]) and the system message is SYS_PROMPT -- one
+    request per distinct non-filler key, none from another question."""
+    import json
+
+    capture = str(tmp_path / "requests")
+    os.makedirs(capture)
+
+    def factory():
+        import json as _json
+        import uuid
+
+        class _Resp:
+            def __init__(self):
+                msg = type("M", (), {"content": _json.dumps(
+                    {"sentiment": "Neutral", "category": "General"})})
+                self.choices = [type("C", (), {"message": msg})]
+
+        class _Completions:
+            def create(self, **kwargs):
+                path = os.path.join(capture, uuid.uuid4().hex)
+                with open(path, "w", encoding="utf-8") as f:
+                    _json.dump(kwargs["messages"], f)
+                return _Resp()
+
+        return type("Client", (), {
+            "chat": type("Chat", (), {"completions": _Completions()})()})()
+
+    max_chars = 12
+    kernel = llm_kernel("retail", client_factory=factory, base_delay=0.001)
+    survey = spark.createDataFrame(_THREE_Q_ROWS, _THREE_Q_COLS)
+    wide, _ = analyze_wide_cached(survey, kernel, "retail",
+                                  str(tmp_path / "cache"),
+                                  max_chars=max_chars)
+    wide.collect()
+
+    sent = []
+    for name in os.listdir(capture):
+        with open(os.path.join(capture, name), encoding="utf-8") as f:
+            sent.append(json.load(f))
+    assert all(m[0] == {"role": "system", "content": SYS_PROMPT}
+               for m in sent)
+    assert all(m[1]["role"] == "user" for m in sent)
+    want = sorted(build_user_prompt("retail", q, a[:max_chars])
+                  for q, a in _distinct_non_filler_keys())
+    assert sorted(m[1]["content"] for m in sent) == want
